@@ -422,13 +422,19 @@ final class CrawlEngine(
       .getOrElse(base)
   }
 
+  /** Maps (observed pending rows, observed dequeue count) to the dequeue
+    * count a fetch epoch uses. Identity; specs replace it to model an
+    * Observation that stage retries or speculation inflated. */
+  private[graft] var observedDequeue: (Long, Long) => Long = (_, dequeued) => dequeued
+
   /** Returns (dequeued rows, frontier rows REMAINING after this epoch;
     * -1 when unknown). The remaining count lets [[fetchFrom]] skip the
     * final all-empty epoch (a full dequeue+classify action that commits
     * nothing) — round 6. Conservative by construction: the pending count
-    * rides an Observation, and any loss/recompute inflation only makes
-    * remaining look LARGER, which runs an extra (correct, empty) epoch —
-    * never skips one that had work. */
+    * rides an Observation, whose loss or inflation only makes remaining
+    * look LARGER (an extra, correct, empty epoch); a zero is confirmed
+    * with an exact dequeue count before it is returned, so an inflated
+    * dequeue observation never skips an epoch that had work. */
   private def fetchEpoch(epoch: Int): (Long, Long) = {
     val obsPending = Observation(s"fetch_epoch_${epoch}_pending")
     val pending = pendingView.observe(obsPending, count(lit(1)).as("rows"))
@@ -608,14 +614,19 @@ final class CrawlEngine(
     // obs fired on the count above; read it NOW for the termination test.
     // (A lost observation degrades to one extra count on the cache.)
     val dispCounts = observed(obs, "disposition")
-    val deqCount = dispCounts.getOrElse("dequeued",
-      described(s"fetch/$epoch dequeue count (obs lost)")(classified.count()))
+    val pendingRows = observedWithin(obsPending, s"fetch/$epoch pending-rows")
+      .flatMap(_.get("rows")).collect { case n: Long => n }
+    val deqCount = dispCounts.get("dequeued")
+      .map(n => pendingRows.fold(n)(observedDequeue(_, n)))
+      .getOrElse(described(s"fetch/$epoch dequeue count (obs lost)")(classified.count()))
     // frontier rows left for the NEXT epoch (pending view size at epoch
     // start minus this epoch's dequeue); -1 = observation lost → run the
-    // next epoch normally
-    val remaining = observedWithin(obsPending, s"fetch/$epoch pending-rows")
-      .flatMap(_.get("rows")).collect { case n: Long => n - deqCount }
-      .getOrElse(-1L)
+    // next epoch normally. Observed counts can only be inflated (stage
+    // retries, speculation): a larger pending count merely runs one more
+    // empty epoch, but a larger dequeue count would end the crawl with
+    // frontier rows left — so a zero is re-checked against an exact count
+    // below before the crawl stops on it.
+    var remaining = pendingRows.map(_ - deqCount).getOrElse(-1L)
     if (deqCount == 0L) {
       // empty dequeue = crawl done — nothing to commit for this epoch
       deq.unpersist(); pages.unpersist(); classified.unpersist()
@@ -722,6 +733,14 @@ final class CrawlEngine(
         if (contentBloom == null) contentBloom = contentDelta
         else contentBloom.mergeInPlace(contentDelta)
     }
+    // the drained-frontier shortcut fires only on an exact dequeue count:
+    // one job counting the cached classify output's rows, run only when
+    // the observed counts say zero is left — the crawl's last epoch. An
+    // RDD count of no columns: no aggregate shuffle (a second job) and no
+    // row decoding to generate code for
+    if (remaining == 0L)
+      remaining = pendingRows.get - described(s"fetch/$epoch dequeue count (exact)")(
+        classified.select().rdd.count())
     deq.unpersist(); pages.unpersist(); classified.unpersist(); fetchedNew.unpersist()
     if (warmHits != null) warmHits.unpersist()
     (deqCount, remaining)

@@ -44,13 +44,23 @@ object Dedup {
           i => text.substr(i, lit(k)))))
 
   /** [[shingles]] as a plain sweep — IDENTICAL contents and order to the
-    * column form (ascending start offsets, first occurrence kept, same
-    * UTF-16 substring windows), returned from one LinkedHashSet pass. */
+    * column form (ascending start offsets, first occurrence kept), returned
+    * from one LinkedHashSet pass. Windows are k code points, as Spark's
+    * `length`/`substr` count: a supplementary character is one position,
+    * never split into its two UTF-16 surrogates. */
   def shinglesArray(text: String, k: Int): Array[String] = {
-    if (text == null || text.length < k) return Array.empty[String]
+    if (text == null || text.codePointCount(0, text.length) < k) return Array.empty[String]
     val seen = new java.util.LinkedHashSet[String]()
-    var i = 0
-    while (i + k <= text.length) { seen.add(text.substring(i, i + k)); i += 1 }
+    var start = 0
+    var end = text.offsetByCodePoints(0, k)
+    var more = true
+    while (more) {
+      seen.add(text.substring(start, end))
+      more = end < text.length
+      if (more) {
+        start = text.offsetByCodePoints(start, 1); end = text.offsetByCodePoints(end, 1)
+      }
+    }
     seen.toArray(new Array[String](seen.size()))
   }
 

@@ -308,10 +308,15 @@ object RenderClient {
     * body. JS-built content is invisible at this level (COVERAGE.md S8). */
   object Static extends RenderClient {
     override def render(url: String, get: Get): Option[(Int, String, String)] =
-      get(url, Seq(
-        "Accept" -> "text/html,*/*;q=0.8", // no xhtml: every gate downstream requires text/html
-        "User-Agent" -> "graft/0.1 (documentation crawler)"))
+      get(url, HtmlHeaders)
   }
+
+  /** Headers of the plain HTML GET — the http_fast level and [[Static]]
+    * send the same request, which is what lets the heavy level reuse the
+    * fast path's answer (see [[HttpFetcher]]). */
+  private[sources] val HtmlHeaders: Seq[(String, String)] = Seq(
+    "Accept" -> "text/html,*/*;q=0.8", // no xhtml: every gate downstream requires text/html
+    "User-Agent" -> "graft/0.1 (documentation crawler)")
 }
 
 /** Real transport for cluster use — the reference's 5-level fetch fallback
@@ -332,6 +337,21 @@ object RenderClient {
   *                   (`runner.py:491-513`); static main-content extraction
   *                   stands in for the rendered DOM (no browser ships in
   *                   this container — admitted scope limit)
+  *
+  * One response per question: a row keeps the last complete answer for its
+  * URL, and a later level reuses it instead of sending a GET that would ask
+  * the same server the same question —
+  *   - http_fast reuses the native level's answer when it is 200 and not
+  *     text/markdown (the server ignored the negotiation);
+  *   - the heavy level with [[RenderClient.Static]], whose GET is
+  *     byte-identical to the fast path's, reuses the fast path's answer
+  *     (fresh or reused from native) unless it is 5xx or 429.
+  * Everything else sends a fresh request: after a transport exception or
+  * timeout, an SSRF rejection, a non-200 native answer, at the proxy level,
+  * on each heavy-level retry, and for any non-Static renderer (a browser
+  * must still render). From a server that answers a repeated question the
+  * same way, every row's page is unchanged and only `loadMs` shrinks. An
+  * HTML page costs one request, a 404 two, a 5xx three.
   *
   * SSRF (F6) is re-validated on EVERY request of every level including
   * each redirect hop (`page.py:25,58,85,268`; redirects are followed
@@ -404,6 +424,7 @@ final class HttpFetcher(
     val admit = validate
     val conv = converter
     val rend = renderer
+    val staticRender = renderer eq RenderClient.Static
     urls.select("urlNorm", "host").mapPartitions { it =>
       // lazy per-partition client (O11 pool analog)
       lazy val client = java.net.http.HttpClient.newBuilder()
@@ -462,6 +483,11 @@ final class HttpFetcher(
         var status = 0; var ctype = ""; var content = ""; var rawHtml = ""
         var method = "none"
         var ssrfBlocked = false
+        // one-response rule (class doc): the native level's 200 answer
+        // stands in for the fast path's GET, and the fast path's answer
+        // for the Static heavy level's byte-identical GET
+        var nativeAnswer: Option[(Int, String, String)] = None
+        var fastAnswer: Option[(Int, String, String)] = None
 
         // level 2: native markdown negotiation
         if (useNative && method == "none") {
@@ -475,6 +501,7 @@ final class HttpFetcher(
             // page the fast/heavy levels could fetch
             case Some((st, ct, body)) if st == 200 && ct.contains("text/markdown") =>
               status = st; ctype = ct; content = body; method = "native"
+            case Some(answer) if answer._1 == 200 => nativeAnswer = Some(answer)
             case _ => ()
           } catch { case _: Exception => () }
         }
@@ -494,27 +521,30 @@ final class HttpFetcher(
         }
         // level 4: HTTP fast path (plain GET + markdown quality gate)
         if (useFast && method == "none" && !ssrfBlocked) {
-          try get(url, Seq(
-            "Accept" -> "text/html,*/*;q=0.8", // no xhtml: every gate downstream requires text/html
-            "User-Agent" -> "graft/0.1 (documentation crawler)")) match {
+          try nativeAnswer.orElse(get(url, RenderClient.HtmlHeaders)) match {
             case None => ssrfBlocked = true
-            case Some((st, ct, body)) if st == 200 && ct.contains("text/html") =>
-              val md = conv.convert(body)
-              if (md.length >= 500) {
-                status = st; ctype = ct; content = md; rawHtml = body; method = "http_fast"
+            case Some(answer @ (st, ct, body)) =>
+              fastAnswer = Some(answer)
+              if (st == 200 && ct.contains("text/html")) {
+                val md = conv.convert(body)
+                if (md.length >= 500) {
+                  status = st; ctype = ct; content = md; rawHtml = body; method = "http_fast"
+                }
               }
-            case _ => ()
           } catch { case _: Exception => () }
         }
-        // level 5: heavy terminal level (playwright analog) with retries
+        // level 5: heavy terminal level (playwright analog) with retries;
+        // a 5xx/429 fast answer is asked again (the server may recover)
         if (method == "none" && !ssrfBlocked) {
+          val reuse = if (staticRender)
+            fastAnswer.filter { case (st, _, _) => st < 500 && st != 429 } else None
           var attempt = 0
           var done = false
           while (!done && attempt <= retries) {
             try {
               // S8 render seam: Static = the validated GET; a browser-
               // backed client returns the JS-rendered DOM instead
-              rend.render(url, get) match {
+              reuse.orElse(rend.render(url, get)) match {
                 case None => ssrfBlocked = true; done = true
                 case Some((st, ct, body)) =>
                   status = st; ctype = ct; rawHtml = if (ct.contains("text/html")) body else ""

@@ -130,6 +130,23 @@ class GoldenReplaySpec extends SparkSpec {
     assert(host1Epochs.length >= 2, "crawl-delay host should span multiple epochs")
   }
 
+  test("an inflated dequeue observation cannot end the crawl with frontier rows left") {
+    val dir = Files.createTempDirectory("graft-inflated-dequeue").toString
+    val e = newEngine(dir)
+    // every fetch epoch observes a dequeue as large as the whole frontier
+    // (what stage retries or speculation can do to an Observation): the
+    // observed remaining count reads 0 from the first fetch epoch on
+    e.observedDequeue = (pendingRows, _) => pendingRows
+    e.run()
+    val epochs = e.orderLog.select("epoch").distinct().count()
+    assert(epochs >= 2, "the crawl stopped after its first fetch epoch")
+    val pending = e.table("pending").get
+    val left = e.table("dequeued")
+      .map(dq => pending.join(dq, Seq("urlNorm"), "left_anti")).getOrElse(pending)
+    assert(left.count() == 0, "frontier rows left after the crawl")
+    assertMatchesSim(e, "inflated-dequeue")
+  }
+
   test("resume after pause (fetch epoch 1) reproduces the uninterrupted run") {
     val dir = Files.createTempDirectory("graft-resume").toString
     val e1 = newEngine(dir)

@@ -102,6 +102,74 @@ class HttpFetcherSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("one response per question: requests per page and their Accept headers") {
+    val (server, base) = newServer()
+    // handlers run concurrently: /slow's native request sleeps past the
+    // client timeout while the other pages are served
+    val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    server.setExecutor(pool)
+    val seen = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.ConcurrentLinkedQueue[String]]()
+    def counted(path: String)(respond: String => HttpHandler): Unit =
+      server.createContext(path, (ex: HttpExchange) => {
+        val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
+        seen.computeIfAbsent(path, _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
+          .add(accept)
+        respond(accept).handle(ex)
+      })
+    val native = "text/markdown, text/html;q=0.9, */*;q=0.8"
+    val html = "text/html,*/*;q=0.8"
+    counted("/big")(_ => handler(200, "text/html", bigBody))
+    counted("/md")(_ => handler(200, "text/markdown", "# Native\n\nbody"))
+    counted("/short")(_ => handler(200, "text/html", "<html><body>tiny</body></html>"))
+    counted("/bin")(_ => handler(200, "application/pdf", "%PDF-1.4"))
+    counted("/gone")(_ => handler(404, "text/html", "not found"))
+    counted("/err")(_ => handler(500, "text/html", "boom"))
+    counted("/mderr")(a =>
+      if (a.contains("text/markdown")) handler(500, "text/markdown", "# error body")
+      else handler(200, "text/html", bigBody))
+    counted("/slow")(a =>
+      if (a.contains("text/markdown")) { (ex: HttpExchange) =>
+        Thread.sleep(6000); handler(200, "text/markdown", "# late").handle(ex) }
+      else handler(200, "text/html", bigBody))
+    server.start()
+    try {
+      val paths = Seq("/big", "/md", "/short", "/bin", "/gone", "/err", "/mderr", "/slow")
+      val urls = paths.map(p => (s"$base$p", "127.0.0.1")).toDF("urlNorm", "host")
+      val methods = new HttpFetcher(maxRetries = 1, timeoutMs = 3000,
+        backoffUnitMs = 0L, validate = allowLoopback).fetchPages(urls)
+        .select("urlNorm", "fetchMethod").as[(String, String)].collect()
+        .map { case (u, m) => u.stripPrefix(base) -> m }.toMap
+      def accepts(p: String): Seq[String] =
+        Option(seen.get(p)).map(_.toArray(Array.empty[String]).toSeq).getOrElse(Seq.empty)
+      assert(accepts("/big") == Seq(native) && methods("/big") == "http_fast")
+      assert(accepts("/md") == Seq(native) && methods("/md") == "native")
+      assert(accepts("/short") == Seq(native) && methods("/short") == "playwright")
+      assert(accepts("/bin") == Seq(native) && methods("/bin") == "playwright")
+      // a non-200 native answer is asked again; the heavy level reuses the 404
+      assert(accepts("/gone") == Seq(native, html))
+      // 5xx is asked again at every level
+      assert(accepts("/err") == Seq(native, html, html))
+      assert(accepts("/mderr") == Seq(native, html) && methods("/mderr") == "http_fast")
+      // a timed-out native GET has no answer: the fast path sends its own
+      assert(accepts("/slow") == Seq(native, html) && methods("/slow") == "http_fast")
+
+      // a browser-backed renderer is still called (its own Accept shows it)
+      seen.clear()
+      val browserBacked = new graft.sources.RenderClient {
+        override def render(url: String, get: graft.sources.RenderClient.Get)
+            : Option[(Int, String, String)] =
+          get(url, Seq("Accept" -> "text/html;rendered"))
+      }
+      val rendered = new HttpFetcher(maxRetries = 0, timeoutMs = 3000,
+        backoffUnitMs = 0L, validate = allowLoopback, renderer = browserBacked)
+        .fetchPages(Seq((s"$base/short", "127.0.0.1")).toDF("urlNorm", "host"))
+        .select("fetchMethod").as[String].collect()
+      assert(rendered.toSeq == Seq("playwright"))
+      assert(accepts("/short") == Seq(native, "text/html;rendered"))
+    } finally { server.stop(0); pool.shutdownNow() }
+  }
+
   test("chain: markdown proxy level (>100-char gate) sits between native and fast path") {
     val (target, tBase) = newServer()
     target.createContext("/page", handler(200, "text/html", "<html>small</html>"))

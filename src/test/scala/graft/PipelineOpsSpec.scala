@@ -287,6 +287,22 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("shinglesArray windows by code point, like the column form, on astral-plane text") {
+    // U+1F600 and U+10400 are one code point and two UTF-16 units each:
+    // Spark's length/substr count the former, so must the sweep
+    val texts = Seq("😀abc😀abc", "ab𐐀cd𐐀",
+      "😀😀😀", "😀😀x", "😀")
+    val fromCol = texts.toDF("t").select(Dedup.shingles($"t", 3).as("sh"))
+      .as[Seq[String]].collect().toSeq
+    texts.zip(fromCol).foreach { case (t, col) =>
+      val arr = Dedup.shinglesArray(t, 3).toSeq
+      assert(arr == col, s"text ${t.codePoints().toArray.mkString(",")}")
+      assert(arr.forall(s => s.codePointCount(0, s.length) == 3), "whole code points only")
+    }
+    assert(Dedup.shinglesArray("😀😀x", 3).toSeq ==
+      Seq("😀😀x"))
+  }
+
   test("signKey UDF ≡ signBitsRange column form (q25 bucket-key equality witness)") {
     // lshTopK now derives bucket keys via the signKey fold (round-6: the
     // unrolled 768-term column tree dominated q25's plan/codegen cost);

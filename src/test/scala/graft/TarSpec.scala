@@ -182,6 +182,28 @@ class TarSpec extends SparkSpec {
     }
   }
 
+  test("sink commit leaves no _temporary/ and the JVM-cached FileSystem keeps checksums") {
+    import spark.implicits._
+    // eight concurrent-ish attempts share one `_temporary/`: none may lose
+    // its temp file to a sibling's cleanup
+    val pairs = (0 until 16).map(i =>
+      (f"t$i%03d", Array.fill(4)(i.toByte), "png", s"cap $i"))
+      .toDF("key", "image", "image_ext", "caption").repartition(8)
+    val dir = graft.util.TempDirs.create("wds-commit").toString
+    assert(Webdataset.sink(pairs, dir).collect().length == 8)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_temporary")),
+      "empty _temporary/ removed after the commit")
+    // the sink's no-checksum setting stays on its private instance: a file
+    // written through the shared FileSystem still gets its .crc sidecar
+    val conf = spark.sparkContext.hadoopConfiguration
+    val shared = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), conf)
+    val probe = new org.apache.hadoop.fs.Path(dir, "probe.bin")
+    val out = shared.create(probe, true)
+    try out.write(1) finally out.close()
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, ".probe.bin.crc")),
+      "shared FileSystem lost its checksum setting")
+  }
+
   test("fromFetched: the engine's image table ships as training shards") {
     import spark.implicits._
     val fetched = Seq(
